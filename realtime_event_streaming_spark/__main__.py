@@ -96,23 +96,11 @@ def cmd_pipeline(args) -> int:
     write_stream_fixture(clicks, f"{out}/wire", n_files=8)
     pipe = start_pipeline(spark, f"{out}/wire", out)
     pipe.await_all()
-    try:
-        agg = spark.read.parquet(f"{out}/page_minute_agg")
-    except Exception:
-        # Short event spans never finalize a window under the 70 s
-        # exact watermark — report instead of crashing on an empty sink.
-        n_raw = spark.read.parquet(f"{out}/clicks_raw").count()
-        print(
-            f"raw events: {n_raw}  rollup windows: 0 "
-            "(event span too short for the exact watermark to close any "
-            "window; try --events/--rate giving a span over ~3 minutes)"
-        )
-        return 0
     q3 = start_anomaly_stage(spark, out, sink_name="cli_scored")
     q3.awaitTermination(600)
     scored = spark.table("cli_scored")
     n_raw = spark.read.parquet(f"{out}/clicks_raw").count()
-    n_agg = agg.count()
+    n_agg = scored.count()  # the stage scores every rollup window once
     n_anom = scored.where(F.col("is_anomaly") == "true").count()
     print(f"raw events: {n_raw}  rollup windows: {n_agg}  anomalies: {n_anom}")
     for r in alerts(scored).limit(5).collect():

@@ -4,26 +4,29 @@ One streaming aggregation replaces BOTH of the reference's duplicated
 write paths (Flink window job StreamJob.java:253-304 AND the ClickHouse
 MV clickhouse_tables.sql:75-85 — the double-write bug, SURVEY.md
 §1.5.2): tumbling 1-minute event-time windows per (page, country) with
-count + EXACT distinct users (reference semantics: HashSet
-StreamJob.java:102-108 / uniqExact :83).
+count + EXACT distinct users (reference semantics: uniqExact :83).
 
-Exact distinct in a streaming window is not a built-in aggregate; the
-implementation chains two stateful operators in one query:
+The exact path is modelled on the reference's own per-window
+``HashSet<String>`` of user ids (StreamJob.java:102-108): one windowed
+aggregate, ``count(*)`` plus ``size(collect_set(user_id))``, so each
+micro-batch parses the wire once and commits one stateful operator.
+The trade-off is the same as the reference's: the state holds every
+open window's user set, so a hot ``(window, page, country)`` key keeps
+one large set in state until its window closes. ``rollup_stream_approx``
+(HLL distinct, 10 s watermark) stays the documented scale default,
+where per-window user sets stop being a good idea (SURVEY.md §7
+hard-part 1).
 
-    parsed events (watermark = window + lateness)
-      ├─ branch "all":  every event
-      └─ branch "uniq": dropDuplicates(minute-key, page, country, user)
-      unionByName -> window groupBy -> conditional counts
+The exact path's watermark delay stays window length + reference
+lateness (60 s + 10 s), so windows finalize 60 s later than the
+reference's. The reference's 10 s delay would change which late rows
+count, not just when windows emit (the boundary is pinned by
+tests/test_streaming.py).
 
-``cnt`` counts the "all" branch, ``unique_users`` the deduplicated
-branch — one sink, append mode, exact. The dedup state must survive
-until its window closes, so this query's watermark delay is
-window length + reference lateness (60 s + 10 s); windows therefore
-finalize 60 s later than the reference's, with identical contents.
-The ``approx`` variant keeps the reference's 10 s emission latency by
-trading exact uniques for HLL (approx_count_distinct) — the documented
-100 TB default, where per-window user sets stop being a good idea
-anyway (SURVEY.md §7 hard-part 1).
+A ``_ck_agg`` checkpoint written by the earlier two-operator graph
+(per-user dedup, self-union, aggregate) cannot be restarted by this
+one: rebuild the rollup from the raw table with
+``io.backfill_minute_rollup`` and start from a fresh checkpoint.
 """
 
 from __future__ import annotations
@@ -44,40 +47,21 @@ def minute_rollup_stream_exact(events: DataFrame) -> DataFrame:
     ``events`` must carry ``withWatermark("ts", EXACT_WATERMARK)``
     (see ingest.parse_clicks(watermark=...)).
     """
-    w = F.window("ts", _WINDOW)
-    allr = events.select(
-        "ts", "page", "country", "user_id", F.lit("all").alias("kind")
-    )
-    # Dedup key uses a *string* minute bucket: a window() column would
-    # carry event-time metadata and collide with the agg's event-time
-    # column (Spark allows one per stream).
-    # dropDuplicatesWithinWatermark (not plain dropDuplicates): dedup
-    # state is evicted once the watermark passes an entry's event time
-    # + delay, so state stays O(active windows) in a long-running
-    # deployment. Plain dropDuplicates on non-event-time keys would
-    # retain one state row per (minute, page, country, user) FOREVER.
-    # Correctness is unchanged: duplicates of a same-minute key are
-    # < 60 s apart, well inside the 70 s delay.
-    uniq = (
-        events.withColumn("mkey", F.date_format("ts", "yyyyMMddHHmm"))
-        .dropDuplicatesWithinWatermark(["mkey", "page", "country", "user_id"])
-        .select("ts", "page", "country", "user_id", F.lit("uniq").alias("kind"))
-    )
-    agg = (
-        allr.unionByName(uniq)
-        .groupBy(w.alias("win"), "page", "country")
+    return (
+        events.groupBy(F.window("ts", _WINDOW).alias("win"), "page", "country")
         .agg(
-            F.count(F.when(F.col("kind") == "all", 1)).alias("cnt"),
-            F.count(F.when(F.col("kind") == "uniq", 1)).alias("unique_users"),
+            F.count("*").alias("cnt"),
+            # size() is int; the sink schema (PAGE_MINUTE_AGG_SCHEMA) is bigint
+            F.size(F.collect_set("user_id")).cast("bigint").alias("unique_users"),
         )
-    )
-    return agg.select(
-        F.col("win.start").alias("window_start"),
-        F.col("win.end").alias("window_end"),
-        "page",
-        "country",
-        "cnt",
-        "unique_users",
+        .select(
+            F.col("win.start").alias("window_start"),
+            F.col("win.end").alias("window_end"),
+            "page",
+            "country",
+            "cnt",
+            "unique_users",
+        )
     )
 
 
@@ -108,10 +92,6 @@ def rollup_stream_approx(
             "unique_users",
         )
     )
-
-
-def minute_rollup_stream_approx(events: DataFrame) -> DataFrame:
-    return rollup_stream_approx(events)
 
 
 def rollup_5min_stream(events: DataFrame) -> DataFrame:

@@ -18,7 +18,9 @@ from dataclasses import dataclass
 
 from pyspark.sql import SparkSession
 from pyspark.sql.streaming import StreamingQuery
+from pyspark.sql.types import StringType, StructField, StructType
 
+from ..schemas import PAGE_MINUTE_AGG_SCHEMA
 from .agg import EXACT_WATERMARK, minute_rollup_stream_exact, write_rollup
 from .ingest import parse_clicks, read_json_file_stream, write_raw_events
 
@@ -46,10 +48,17 @@ def start_pipeline(
 ) -> Pipeline:
     """Start the ingestion + rollup queries over a wire-format JSON
     directory (swap ``read_json_file_stream`` for ``read_kafka_stream``
-    in a Kafka deployment — everything downstream is identical)."""
+    in a Kafka deployment — everything downstream is identical).
+
+    ``availableNow`` (the default) replays the files already there, one
+    per micro-batch; any other trigger tails a live source and drains
+    every file that arrived since the last batch, because a per-batch
+    cap on a live source builds an ever-growing backlog."""
     trigger = trigger or {"availableNow": True}
+    max_files = 1 if trigger.get("availableNow") else None
     stream = parse_clicks(
-        read_json_file_stream(spark, wire_path), watermark=EXACT_WATERMARK
+        read_json_file_stream(spark, wire_path, max_files_per_trigger=max_files),
+        watermark=EXACT_WATERMARK,
     )
     q1 = write_raw_events(
         stream, f"{out_dir}/clicks_raw", f"{out_dir}/_ck_raw", trigger=trigger
@@ -72,13 +81,18 @@ def start_anomaly_stage(
     """Stage 2 of the deployment: stream the rollup table through the
     Welford scorer into a memory sink (swap for a Kafka/console sink in
     production). Decoupled from the rollup query via storage — each
-    stage restarts and backfills independently (SURVEY.md §3)."""
+    stage restarts and backfills independently (SURVEY.md §3).
+
+    The rollup table is read with its declared schema, so the stage
+    starts without a schema-inference job and also on a sink in which
+    no window has finalized yet."""
     from .anomaly_stream import score_rollup_stream
 
     trigger = trigger or {"availableNow": True}
-    agg_path = f"{out_dir}/page_minute_agg"
-    schema = spark.read.parquet(agg_path).schema
-    rollup = spark.readStream.schema(schema).parquet(agg_path)
+    schema = StructType(
+        PAGE_MINUTE_AGG_SCHEMA.fields + [StructField("month", StringType())]
+    )
+    rollup = spark.readStream.schema(schema).parquet(f"{out_dir}/page_minute_agg")
     return (
         score_rollup_stream(rollup.drop("month"))
         .writeStream.format("memory")

@@ -16,6 +16,7 @@ from realtime_event_streaming_spark.streaming.deploy import (
     ProgressRecorder,
     data_lag_seconds,
     query_metrics,
+    start_anomaly_stage,
     start_pipeline,
 )
 
@@ -88,3 +89,35 @@ def test_backfill_matches_streaming_rollup(spark, tmp_path):
         ).count()
         == 0
     )
+
+
+def test_anomaly_stage_starts_on_rollup_sink_without_windows(spark, tmp_path):
+    # 4 s of events: the 70 s exact watermark closes no window, so the
+    # rollup sink holds no data file and its schema cannot be inferred
+    clicks = generate_clicks(spark, n_events=200, n_users=20, rate_per_sec=50)
+    write_stream_fixture(clicks, str(tmp_path / "wire"), n_files=2)
+    out = str(tmp_path / "out")
+    start_pipeline(spark, str(tmp_path / "wire"), out).await_all()
+
+    q = start_anomaly_stage(spark, out, sink_name="scored_no_windows")
+    q.awaitTermination(300)
+    assert q.exception() is None
+    assert spark.table("scored_no_windows").count() == 0
+
+
+def test_live_trigger_drains_all_waiting_files_in_one_batch(spark, tmp_path):
+    clicks = generate_clicks(spark, n_events=800, n_users=50, rate_per_sec=5)
+    write_stream_fixture(clicks, str(tmp_path / "wire"), n_files=4)
+    pipe = start_pipeline(
+        spark,
+        str(tmp_path / "wire"),
+        str(tmp_path / "out"),
+        trigger={"processingTime": "1 second"},
+    )
+    try:
+        pipe.raw_query.processAllAvailable()
+        pipe.rollup_query.processAllAvailable()
+        rows = [m["input_rows"] for m in query_metrics(pipe.raw_query)]
+    finally:
+        pipe.stop()
+    assert rows[0] == 800, rows

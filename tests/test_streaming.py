@@ -196,12 +196,12 @@ def test_anomaly_state_survives_chunked_out_of_order_delivery(spark, tmp_path):
     assert anom[0].n_observations == 499, "spike must see full prior history"
 
 
-def test_dedup_state_is_evicted_as_watermark_advances(spark, tmp_path):
-    """Round-1 advisory: plain dropDuplicates on non-event-time keys
-    retains one state row per key FOREVER in a long-running deployment.
-    With dropDuplicatesWithinWatermark the dedup operator must (a)
-    actually remove rows as the watermark advances and (b) finish with
-    far fewer state rows than the run's total distinct dedup keys."""
+def test_rollup_state_is_evicted_as_watermark_advances(spark, tmp_path):
+    """The exact rollup keeps one state row (count + user set) per open
+    (window, page, country) key. Its state operator must (a) remove
+    rows as the watermark advances and (b) finish with far fewer state
+    rows than the run's distinct (minute, page, country) keys, so state
+    stays O(open windows) in a long-running deployment."""
     clicks = generate_clicks(spark, n_events=3000, n_users=100, rate_per_sec=1.5)
     write_stream_fixture(clicks, str(tmp_path / "in"), n_files=10)
     stream = parse_clicks(
@@ -211,7 +211,7 @@ def test_dedup_state_is_evicted_as_watermark_advances(spark, tmp_path):
     q = (
         minute_rollup_stream_exact(stream)
         .writeStream.format("memory")
-        .queryName("dedup_state_probe")
+        .queryName("rollup_state_probe")
         .outputMode("append")
         .trigger(availableNow=True)
         .start()
@@ -219,27 +219,84 @@ def test_dedup_state_is_evicted_as_watermark_advances(spark, tmp_path):
     q.awaitTermination(300)
 
     progresses = [p for p in q.recentProgress if p.get("stateOperators")]
-    dedup_ops = [
+    assert all(len(p["stateOperators"]) == 1 for p in progresses)
+    state_ops = [
         op
         for p in progresses
         for op in p["stateOperators"]
-        if op.get("operatorName") == "dedupeWithinWatermark"
+        if op.get("operatorName") == "stateStoreSave"
     ]
-    assert dedup_ops, "dedup operator missing from progress"
-    assert sum(op.get("numRowsRemoved", 0) for op in dedup_ops) > 0, (
-        "watermark advance never evicted dedup state"
+    assert state_ops, "rollup state operator missing from progress"
+    assert sum(op.get("numRowsRemoved", 0) for op in state_ops) > 0, (
+        "watermark advance never evicted rollup state"
     )
 
     total_keys = (
         parse_clicks(as_json_records(clicks))
-        .select(
-            F.date_format("ts", "yyyyMMddHHmm"), "page", "country", "user_id"
-        )
+        .select(F.date_format("ts", "yyyyMMddHHmm"), "page", "country")
         .distinct()
         .count()
     )
-    final_rows = dedup_ops[-1]["numRowsTotal"]
-    assert final_rows < total_keys / 2, (final_rows, total_keys)
+    final_rows = state_ops[-1]["numRowsTotal"]
+    assert final_rows < total_keys / 4, (final_rows, total_keys)
+
+
+def test_rollup_counts_row_behind_watermark_in_open_window(spark, tmp_path):
+    """Late-row boundary of the exact rollup. File 1 spans 0-200 s of
+    event time (watermark 200 - 70 = 130 s); file 2 is one event at
+    125 s from a user new to the window: behind the watermark, but its
+    window [120, 180) is still open; file 3 closes that window. The
+    window must equal the batch rollup of all events, the late event
+    included, and the emitted schema must be the sink's declared one."""
+    import json
+    import os
+
+    from realtime_event_streaming_spark.schemas import PAGE_MINUTE_AGG_SCHEMA
+
+    t0 = 1_704_067_200_000  # 2024-01-01T00:00:00Z, minute-aligned
+
+    def event(i, sec, user):
+        return {
+            "event_id": f"e{i}", "user_id": user, "ts": t0 + sec * 1000,
+            "page": "/", "referrer": "/", "country": "US", "device": "mobile",
+        }
+
+    files = [
+        [event(i, s, f"u{i % 7}") for i, s in enumerate(range(0, 201, 2))],
+        [event(1000, 125, "u_new")],
+        [event(2000 + i, s, f"u{i % 7}") for i, s in enumerate(range(260, 321, 2))],
+    ]
+    in_dir = tmp_path / "in"
+    in_dir.mkdir()
+    base = os.path.getmtime(in_dir) - len(files)
+    for n, rows in enumerate(files):
+        f = in_dir / f"part-{n}.txt"
+        f.write_text("".join(json.dumps(r) + "\n" for r in rows))
+        os.utime(f, (base + n, base + n))
+
+    stream = parse_clicks(
+        read_json_file_stream(spark, str(in_dir)), watermark=EXACT_WATERMARK
+    )
+    emitted = _run_to_memory(
+        minute_rollup_stream_exact(stream), spark, "rollup_boundary"
+    )
+    assert [(f.name, f.dataType) for f in emitted.schema] == [
+        (f.name, f.dataType) for f in PAGE_MINUTE_AGG_SCHEMA
+    ]
+
+    def window_120(df):
+        rows = df.where(
+            F.col("window_start") == F.timestamp_millis(F.lit(t0 + 120_000))
+        ).collect()
+        assert len(rows) == 1, rows
+        return rows[0].cnt, rows[0].unique_users
+
+    wire = spark.createDataFrame(
+        [(json.dumps(r),) for rows in files for r in rows], "value string"
+    )
+    want = window_120(minute_rollup_batch(parse_clicks(wire)))
+    assert want == (31, 8)
+    assert window_120(emitted) == want
 
 
 def test_kafka_wire_contract_round_trip(spark):
