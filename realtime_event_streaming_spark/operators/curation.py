@@ -42,30 +42,6 @@ _G5_EXPR = (
     "element_at(tk, i + 2), element_at(tk, i + 3), element_at(tk, i + 4)))))"
 )
 
-_DUCK_G5 = """
-toks AS (
-  SELECT doc_id, string_split(text, ' ') AS tk FROM documents
-  WHERE len(string_split(text, ' ')) >= 5
-),
-g5 AS (
-  SELECT DISTINCT doc_id,
-         tk[i] || ' ' || tk[i+1] || ' ' || tk[i+2] || ' ' || tk[i+3]
-               || ' ' || tk[i+4] AS s
-  FROM toks, UNNEST(generate_series(1, len(tk) - 4)) AS g(i)
-)
-"""
-
-
-def doc_5grams(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Distinct word-5-gram spans per document."""
-    docs = load_table(spark, sf_dir, "documents")
-    return (
-        docs.select("doc_id", F.split("text", " ").alias("tk"))
-        .where(F.size("tk") >= 5)
-        .select("doc_id", F.expr(_G5_EXPR).alias("s"))
-    )
-
-
 _CONTAMINATION_DUCK = f"""
 WITH corpus AS (
   SELECT doc_id, text FROM documents

@@ -5,9 +5,16 @@ Design notes (100 TB posture):
 - AQE on: runtime coalescing of shuffle partitions, skew-join splitting
   and dynamic join-strategy switching replace hand-tuned partition
   counts when the same plans run on a real cluster.
-- ``spark.sql.shuffle.partitions`` defaults to 2x local cores here; on a
-  cluster this is expected to be overridden (or left to AQE with a high
-  initial value).
+- ``spark.sql.shuffle.partitions`` is the local core count
+  (``SPARK_GRAFT_CPUS``) in ``get_spark``: one partition per core. Batch
+  shuffles start there and AQE coalesces them further. Stateful
+  streaming shuffles are not AQE-coalesced: their count is fixed in the
+  query's checkpoint at first start, and every state partition commits
+  its own delta and checksum files on every trigger. One state-store
+  task per core runs each trigger in one wave and commits no more files
+  than the cores can write at once. A query restarted from an existing
+  checkpoint keeps the count stored there. On a cluster this is
+  expected to be overridden.
 - Arrow enabled for any pandas-UDF path (the slow-path escape hatch).
 - Session timezone pinned to UTC so event-time bucketing is
   deterministic and matches the DuckDB oracle (naive timestamps).
@@ -107,7 +114,9 @@ def fixture_scale_shuffle(spark: SparkSession, n: int = 4):
     which dominates the replay queries' wall time inside the
     correctness gate (judge r8 item 3: bound the gate cost). Values
     are partition-count-invariant (the oracle hash proves it);
-    production streams keep the session default."""
+    production streams keep the session default. ``get_spark``'s
+    default is one partition per core, so at 4 cores this is a no-op
+    (below 4 it raises the count to 4)."""
     old = spark.conf.get(_SHUFFLE_KEY, None)
     spark.conf.set(_SHUFFLE_KEY, str(n))
     try:
@@ -122,15 +131,16 @@ def fixture_scale_shuffle(spark: SparkSession, n: int = 4):
 def get_spark(app_name: str = "realtime-event-streaming-spark") -> SparkSession:
     """Create (or fetch) a local session sized from the environment.
 
-    ``SPARK_GRAFT_CPUS`` controls local parallelism (driver contract);
-    on a real cluster the builder master/conf come from spark-submit and
+    ``SPARK_GRAFT_CPUS`` controls local parallelism (driver contract)
+    and the shuffle-partition count (see the module docstring); on a
+    real cluster the builder master/conf come from spark-submit and
     this factory is bypassed entirely.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     builder = (
         SparkSession.builder.appName(app_name)
         .master(f"local[{cpus}]")
-        .config("spark.sql.shuffle.partitions", str(max(int(cpus), 8)))
+        .config(_SHUFFLE_KEY, int(cpus))
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.files.maxPartitionBytes", "134217728")

@@ -7,8 +7,9 @@ CLI's ``pipeline`` command and tests drive the same wiring.
 
 ``query_metrics`` / ``ProgressRecorder`` replace the reference's
 Prometheus/Grafana surface (MONITORING_SETUP.md): per-query input
-rate, process rate, batch duration and watermark, as plain dicts /
-JSONL — scrapeable by anything.
+rate, process rate, batch duration and its trigger phases, watermark
+and state-store rows, commit time and memory, as plain dicts / JSONL —
+scrapeable by anything.
 """
 
 from __future__ import annotations
@@ -117,6 +118,19 @@ def _iso_to_epoch(s: str | None) -> float | None:
         return None
 
 
+#: Trigger phases reported in ``StreamingQueryProgress.durationMs``:
+#: the whole trigger, then its parts in execution order.
+TRIGGER_PHASES = (
+    "triggerExecution",
+    "latestOffset",
+    "getBatch",
+    "queryPlanning",
+    "addBatch",
+    "walCommit",
+    "commitOffsets",
+)
+
+
 def query_metrics(query: StreamingQuery) -> list[dict]:
     """Per-batch metrics from a query's recent progress: the numbers
     the reference's Grafana dashboard charts (records-in/out rates,
@@ -124,9 +138,16 @@ def query_metrics(query: StreamingQuery) -> list[dict]:
     event-time lag (batch wall time minus newest event processed — the
     live-path analogue of the reference's ``data_lag_seconds``,
     sql/metrics_queries.sql:33-40; wall clock is legitimate in the live
-    path, unlike the deterministic oracle queries)."""
+    path, unlike the deterministic oracle queries).
+
+    Each record also splits the batch's time into ``TRIGGER_PHASES``
+    (``phases_ms``; a phase the batch did not run is absent) and sums
+    the state store's commit time and memory over all stateful
+    operators (0 for a stateless query)."""
     out = []
     for p in query.recentProgress:
+        durations = p.get("durationMs") or {}
+        ops = p.get("stateOperators") or []
         batch_ts = _iso_to_epoch(p.get("timestamp"))
         ev_max = _iso_to_epoch((p.get("eventTime") or {}).get("max"))
         lag = (
@@ -143,9 +164,13 @@ def query_metrics(query: StreamingQuery) -> list[dict]:
                 "batch_duration_ms": p.get("batchDuration"),
                 "watermark": (p.get("eventTime") or {}).get("watermark"),
                 "data_lag_seconds": lag,
-                "state_rows": sum(
-                    op.get("numRowsTotal", 0)
-                    for op in p.get("stateOperators", [])
+                "phases_ms": {
+                    ph: durations[ph] for ph in TRIGGER_PHASES if ph in durations
+                },
+                "state_rows": sum(op.get("numRowsTotal", 0) for op in ops),
+                "state_commit_ms": sum(op.get("commitTimeMs", 0) for op in ops),
+                "state_memory_bytes": sum(
+                    op.get("memoryUsedBytes", 0) for op in ops
                 ),
             }
         )

@@ -51,7 +51,32 @@ def test_restart_from_checkpoint_is_exactly_once(spark, tmp_path, provider):
         spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
 
 
-def _run_recovery_scenario(spark, tmp_path):
+def test_restart_keeps_checkpointed_partition_count(spark, tmp_path):
+    """A stateful query's shuffle-partition count is fixed in its
+    checkpoint at first start. Phase 1 runs with 8 partitions; the
+    restart runs under the session default (one per local core) and
+    must still run 8 state partitions, exactly-once."""
+    key = "spark.sql.shuffle.partitions"
+
+    def phase1(run_once):
+        old = spark.conf.get(key)
+        spark.conf.set(key, "8")
+        try:
+            run_once()
+        finally:
+            spark.conf.set(key, old)
+
+    restarted = _run_recovery_scenario(spark, tmp_path, phase1=phase1)
+    (op,) = restarted.lastProgress["stateOperators"]
+    assert op["numShufflePartitions"] == 8
+    state = tmp_path / "ck" / "state" / "0"
+    assert sorted(int(p) for p in os.listdir(state) if p.isdigit()) == list(range(8))
+
+
+def _run_recovery_scenario(spark, tmp_path, phase1=lambda run_once: run_once()):
+    """Stop mid-stream, deliver the rest, restart on the same checkpoint
+    and sink; returns the restarted query. ``phase1`` runs the first
+    start (a hook for confs that only the first start sees)."""
     d = str(tmp_path)
     clicks = generate_clicks(spark, n_events=3000, n_users=100, rate_per_sec=5)
     write_stream_fixture(clicks, d + "/all", n_files=6)
@@ -71,14 +96,15 @@ def _run_recovery_scenario(spark, tmp_path):
             trigger={"availableNow": True},
         )
         q.awaitTermination(300)
+        return q
 
-    run_once()
+    phase1(run_once)
     n_phase1 = spark.read.parquet(d + "/agg").count()
     assert n_phase1 > 0, "phase 1 should finalize some windows"
 
     for p in parts[3:]:
         shutil.copy2(os.path.join(d + "/all", p), os.path.join(d + "/in", p))
-    run_once()
+    restarted = run_once()
 
     emitted = spark.read.parquet(d + "/agg").drop("month")
     truth = minute_rollup_batch(parse_clicks(as_json_records(clicks)))
@@ -98,3 +124,4 @@ def _run_recovery_scenario(spark, tmp_path):
     assert emitted.count() > n_phase1, "restart must process the new files"
     assert mism == 0, "restarted query diverged from batch truth"
     assert dups == 0, "restart double-emitted windows"
+    return restarted

@@ -45,6 +45,13 @@ def test_pipeline_wiring_and_metrics(spark, tmp_path):
     # lag is large and positive whenever eventTime.max is reported
     lags = [m["data_lag_seconds"] for m in roll if m["data_lag_seconds"] is not None]
     assert lags and all(lag > 0 for lag in lags)
+    # every batch splits its time into trigger phases; the rollup's
+    # state store reports its commit time and memory
+    for m in metrics + roll:
+        assert {"triggerExecution", "addBatch", "walCommit"} <= m["phases_ms"].keys()
+    assert any(m["state_commit_ms"] > 0 for m in roll)
+    assert any(m["state_memory_bytes"] > 0 for m in roll)
+    assert all(m["state_commit_ms"] == 0 for m in metrics)
 
     # reference formula-exact at-rest lag: now() - max(created_at); the
     # raw sink stamped created_at moments ago, so the lag is tiny
@@ -53,8 +60,12 @@ def test_pipeline_wiring_and_metrics(spark, tmp_path):
 
     rec = ProgressRecorder(str(tmp_path / "metrics.jsonl"))
     n = rec.record(pipe.raw_query)
+    n_roll = rec.record(pipe.rollup_query)
     lines = [json.loads(l) for l in open(tmp_path / "metrics.jsonl")]
-    assert len(lines) == n and lines[0]["input_rows"] is not None
+    assert len(lines) == n + n_roll and lines[0]["input_rows"] is not None
+    assert lines[-1]["phases_ms"] == roll[-1]["phases_ms"]
+    assert any(l["state_commit_ms"] > 0 for l in lines[n:])
+    assert all("state_memory_bytes" in l for l in lines)
 
 
 def test_backfill_matches_streaming_rollup(spark, tmp_path):
@@ -121,3 +132,16 @@ def test_live_trigger_drains_all_waiting_files_in_one_batch(spark, tmp_path):
     finally:
         pipe.stop()
     assert rows[0] == 800, rows
+
+
+def test_state_partitions_follow_local_cores(spark, tmp_path):
+    # the session default is one shuffle partition per local core, and a
+    # stateful query keeps one state-store partition per shuffle partition
+    clicks = generate_clicks(spark, n_events=200, n_users=20, rate_per_sec=50)
+    write_stream_fixture(clicks, str(tmp_path / "wire"), n_files=1)
+    out = tmp_path / "out"
+    start_pipeline(spark, str(tmp_path / "wire"), str(out)).await_all()
+
+    state = out / "_ck_agg" / "state" / "0"
+    parts = [p for p in os.listdir(state) if p.isdigit()]
+    assert len(parts) == int(os.environ["SPARK_GRAFT_CPUS"]), sorted(parts)
